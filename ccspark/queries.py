@@ -1189,14 +1189,17 @@ def q_perplexity_outliers(d: str) -> str:
         # r6 FUSED rendering: the rejoin form planned the pages explode
         # 12x (stats/mad/scored/qq_ranked each re-derive doc_ll ->
         # toks -> pages; runtime exchange reuse recovered only part of
-        # it).  One doc_ll pass instead: corpus total as a window over
-        # vocab (same sum), per-lang median/MAD/rank/count as windows
-        # over doc_ll (same groups, same median function -> identical
-        # values), and the scored+QQ tag-union emitted by ONE
-        # two-element struct explode per doc_ll row (each row yields
-        # exactly one scored and one QQ row, so the union IS a per-row
-        # duplication).  The Acklam inputs (pp, ql, qh, qm, rr) are
-        # bound behind the struct-explode barrier per the
+        # it).  One doc_ll pass instead: corpus total as a one-row sum
+        # cross-joined onto vocab (same sum; a sum(cnt) OVER () window
+        # would pull the whole vocab into one task, and a scalar
+        # subquery re-derived vocab, measured 10-30% slower at sf0.1),
+        # per-lang median/MAD/rank/count as windows over doc_ll (same
+        # groups, same median function -> identical values), and the
+        # scored+QQ tag-union emitted by ONE two-element struct explode
+        # per doc_ll row (each row yields exactly one scored and one QQ
+        # row, so the union IS a per-row duplication).  The Acklam
+        # inputs (pp, ql, qh, qm, rr) are bound behind the struct-explode
+        # barrier per the
         # norm_ppf_case_sql contract - attribute reads, no re-inlined
         # sqrt/ln trees.  DuckDB keeps the rejoin rendering; all values
         # hash-identical (oracle MATCH, plain + hostile).
@@ -1214,7 +1217,10 @@ toks AS (SELECT * FROM {unnest_w} u WHERE length(w) > 0),
 vocab AS (
   SELECT w, count(*) AS cnt FROM toks GROUP BY w
 ),
-vocab_t AS (SELECT w, cnt, sum(cnt) OVER () AS n FROM vocab),
+vocab_t AS (
+  SELECT v.w, v.cnt, t.n
+  FROM vocab v CROSS JOIN (SELECT sum(cnt) AS n FROM vocab) t
+),
 doc_ll AS (
   SELECT t.doc_id, t.lang,
          round(avg(ln(v.cnt * 1e0 / v.n)), 4) AS loglik

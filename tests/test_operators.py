@@ -474,13 +474,19 @@ def test_jaccard_on_candidates_exact(spark):
         assert got[(1, 2)] == 0.0, fam
 
 
-def test_dedup_near_verify_exact(spark):
+@pytest.mark.parametrize("family", ["md5", "xxhash64"])
+def test_dedup_near_verify_exact(spark, family):
     """verify_exact=True thresholds on the TRUE Jaccard: a pair whose
     minhash estimate overshoots its real similarity is kept by the
     estimate path but correctly retained once verified.  With 12 hashes
     the estimate resolution is 1/12, so a doc pair at true Jaccard ~0.55
     can estimate well above 0.75; exact verification at threshold 0.75
-    must NOT merge them, while both paths agree exact dups merge."""
+    must NOT merge them, while both paths agree exact dups merge.
+
+    The exact Jaccard is computed inside the LSH bucket from the
+    shingle sets the sketches carry; its verdicts must equal
+    jaccard_on_candidates >= threshold on the same candidates, including
+    empty, whitespace-only and shorter-than-k documents."""
     from ccspark import dedup
     words = [f"w{i}" for i in range(40)]
     half = words[:26] + [f"x{i}" for i in range(14)]
@@ -492,14 +498,40 @@ def test_dedup_near_verify_exact(spark):
     ])
     kept = {r.doc_id for r in
             dedup.dedup_near(docs, threshold=0.95, verify_exact=True,
-                             hash_family="xxhash64").collect()}
+                             hash_family=family).collect()}
     assert kept == {0, 2, 3}
     # the verified edge set is a subset of the estimate edge set
-    est = dedup.near_dup_clusters(docs, 0.4, hash_family="xxhash64")
-    ver = dedup.near_dup_clusters(docs, 0.4, hash_family="xxhash64",
+    est = dedup.near_dup_clusters(docs, 0.4, hash_family=family)
+    ver = dedup.near_dup_clusters(docs, 0.4, hash_family=family,
                                   verify_exact=True)
     assert {r.doc_id for r in ver.collect()} <= \
         {r.doc_id for r in est.collect()}
+
+    # in-bucket verdicts == jaccard_on_candidates on the same candidates
+    texts = [" ".join(words[:40 - m] + [f"y{m}_{j}" for j in range(m)])
+             for m in (0, 1, 3, 6, 10, 14, 20)]
+    texts += ["", "", " ", " ", "   ", "   ", "solo", "solo",
+              "two words", "two words", "two words more"]
+    edge_docs = spark.createDataFrame(
+        [Row(doc_id=i, text=t) for i, t in enumerate(texts)])
+    empty = {i for i, t in enumerate(texts) if t == ""}
+    cand = dedup.minhash_near_dups(edge_docs, num_hashes=12, bands=4,
+                                   hash_family=family)
+    exact = {(r.doc_a, r.doc_b): r.jaccard
+             for r in dedup.jaccard_on_candidates(
+                 edge_docs, cand, hash_family=family).collect()}
+    assert not any(set(p) & empty for p in exact), exact
+    assert any(0.0 < j < 1.0 for j in exact.values()), exact
+    # whitespace-only and short docs pair with their copies at 1.0
+    dups = {(texts.index(t), i) for i, t in enumerate(texts)
+            if t and texts.index(t) != i}
+    assert len(dups) == 4 and all(exact[p] == 1.0 for p in dups), exact
+    for th in (0.3, 0.6, 0.9, 1.0):
+        want = {p for p, j in exact.items() if j >= th}
+        got = {(r.doc_a, r.doc_b) for r in dedup._near_dup_edges(
+            edge_docs, th, "text", 3, 12, 4, "doc_id", family,
+            True).collect()}
+        assert got == want, (th, got, want)
 
 
 def test_simhash_xxhash64_family(spark):

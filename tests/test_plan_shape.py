@@ -228,10 +228,73 @@ def test_word_hash_kgrams_single_evaluation(spark):
     assert folds(dedup.shingle_hashes(docs)) == 1
     assert folds(dedup.winnow_fingerprints(docs,
                                            hash_family="xxhash64")) == 1
-    # the pair query legitimately re-derives the signature subtree once
-    # per join side (4 sides; uncached by design) - but never more
     assert folds(dedup.minhash_near_dups(docs,
-                                         hash_family="xxhash64")) <= 4
+                                         hash_family="xxhash64")) == 1
+
+
+def test_near_dup_edges_one_pass(spark):
+    """The verified near-dup edge stage is one pass: per-document
+    sketches -> ONE (band, digest) bucket aggregate -> exact Jaccard
+    inside the bucket.  No join (the gram-join verification is gone),
+    one words split and one gram chain per family."""
+    from pyspark.sql import Row
+
+    from ccspark import dedup
+    docs = spark.createDataFrame(
+        [Row(doc_id=i, text="alpha bravo charlie delta echo foxtrot")
+         for i in range(3)])
+    for fam, gram in (("md5", r"concat_ws\( , slice\("),
+                      ("xxhash64", r"zip_with\(slice\(")):
+        plan = plan_of(dedup._near_dup_edges(
+            docs, 0.5, "text", 3, 12, 4, "doc_id", fam, True))
+        assert "Join" not in plan, plan
+        assert len(re.findall(
+            r"Exchange hashpartitioning\(band#\d+, digest#", plan)) == 1, \
+            plan
+        final = [ln for ln in plan.splitlines()
+                 if "keys=[band#" in ln and "functions=[collect_list" in ln]
+        assert len(final) == 1, plan
+        assert plan.count("split(") == 1, plan
+        assert len(re.findall(gram, plan)) == 1, (fam, plan)
+        assert "array_intersect" in plan, plan
+
+
+def _physical_nodes(node):
+    """Every node of a physical plan: through the adaptive wrapper and
+    into subquery plans."""
+    if node.nodeName() == "AdaptiveSparkPlan":
+        node = node.initialPlan()
+    out = [node]
+    for seq in (node.children(), node.subqueries()):
+        for i in range(seq.size()):
+            out += _physical_nodes(seq.apply(i))
+    return out
+
+
+def test_perplexity_outliers_no_global_window(spark):
+    """A window with an empty partition spec runs on ONE task whatever
+    the data size.  The Spark rendering of perplexity_outliers takes the
+    corpus token total as a one-row sum, not sum(cnt) OVER ()."""
+    from ccspark import queries as Q
+    from ccspark.sqlgen import SPARK
+    pages = spark.createDataFrame(
+        [(i, f"http://d{i}.de/", "alpha beta " * (i + 1), "en")
+         for i in range(6)],
+        "doc_id bigint, url string, text string, lang string")
+    # the template reads the pages_src view; put back any registered one
+    prev = (spark.table("pages_src")
+            if spark.catalog.tableExists("pages_src") else None)
+    pages.createOrReplaceTempView("pages_src")
+    try:
+        df = spark.sql(Q.QUERY_BUILDERS["perplexity_outliers"](SPARK))
+        plan = df._jdf.queryExecution().executedPlan()
+    finally:
+        if prev is not None:
+            prev.createOrReplaceTempView("pages_src")
+    windows = [n for n in _physical_nodes(plan) if n.nodeName() == "Window"]
+    assert windows, plan.toString()
+    assert all(not n.partitionSpec().isEmpty() for n in windows), \
+        [n.toString() for n in windows]
 
 
 def test_duck_renderings_free_of_spark_scan_hints():
